@@ -19,12 +19,17 @@ from pyspark.sql import functions as F
 
 from paddle_spark.config import DEFAULT_CONFIG, ExtractConfig
 from paddle_spark.operators.dedup import (
+    dedup_transitive,
     drop_exact_dups,
     drop_near_dup_candidates,
     minhash_dedup_candidates,
 )
 from paddle_spark.operators.extract_job import extract_pages
-from paddle_spark.operators.textstats import langid, quality_features
+from paddle_spark.operators.textstats import (
+    _quality_cols,
+    _repetition_cols,
+    lang_guess_col,
+)
 
 
 def curate(
@@ -42,73 +47,77 @@ def curate(
 ) -> tuple[DataFrame, dict]:
     """Run the curation funnel. Returns (curated DataFrame, funnel counts).
 
-    The counts dict materializes the intermediate stages (each count is an
-    action) — callers that only want the plan can ignore it by passing the
-    returned DataFrame straight to a writer.
+    The gate columns are one projection over the extracted pages (one row
+    per page, even when urls repeat), persisted once. The funnel's actions
+    are: the ``docs_in`` count; one aggregate over the scored frame for
+    ``extracted_ok``, ``after_lang`` and ``after_quality``; the
+    ``after_repetition`` count when that gate is on; the count of the
+    persisted exact-dedup output; the eager checkpoint of the MinHash
+    signature buckets; and the ``after_near_dedup`` count. Both persisted
+    frames are released before returning, so the returned plan recomputes
+    when consumed.
     """
     counts: dict[str, int] = {}
     counts["docs_in"] = pages.count()
 
-    extracted = extract_pages(pages, cfg, n_partitions).filter(
-        F.col("parse_ok") & (F.length("text") > 0)
+    text = F.col("text")
+    quality = _quality_cols(text)
+    lang_ok = F.col("lang_guess").isin(*langs)
+    kept = lang_ok & (F.col("quality_score") >= min_quality) & (
+        F.col("n_tokens") >= min_tokens
     )
-    # cache: the funnel reuses this frame across several stages
-    extracted = extracted.persist()
-    counts["extracted_ok"] = extracted.count()
-
-    lang_tbl = langid(extracted, id_col="url", text_col="text").select(
-        "url", "lang_guess"
+    scored = (
+        extract_pages(pages, cfg, n_partitions)
+        .filter(F.col("parse_ok") & (F.length("text") > 0))
+        .select(
+            "*",
+            lang_guess_col(text).alias("lang_guess"),
+            quality["n_tokens"],
+            quality["quality_score"],
+        )
+        .persist()
     )
-    quality_tbl = quality_features(extracted, id_col="url", text_col="text").select(
-        "url", "n_tokens", "quality_score"
-    )
-    gated = (
-        extracted.join(lang_tbl, "url")
-        .join(quality_tbl, "url")
-        .filter(F.col("lang_guess").isin(*langs))
-    )
-    counts["after_lang"] = gated.count()
-    gated = gated.filter(
-        (F.col("quality_score") >= min_quality) & (F.col("n_tokens") >= min_tokens)
-    )
-    counts["after_quality"] = gated.count()
+    exact = None
+    try:
+        gate = scored.agg(
+            F.count(F.lit(1)), F.count(F.when(lang_ok, 1)), F.count(F.when(kept, 1))
+        ).first()
+        counts["extracted_ok"], counts["after_lang"], counts["after_quality"] = gate
+        gated = scored.filter(kept)
 
-    # optional Gopher-repetition gate (Rae et al. A1.1) — off by default
-    if max_dup_line_frac is not None or max_top_bigram_frac is not None:
-        from paddle_spark.operators.textstats import repetition_features
+        # optional Gopher-repetition gate (Rae et al. A1.1) — off by default
+        if max_dup_line_frac is not None or max_top_bigram_frac is not None:
+            gated = gated.select("*", *_repetition_cols(text))
+            if max_dup_line_frac is not None:
+                gated = gated.filter(F.col("dup_line_frac") <= max_dup_line_frac)
+            if max_top_bigram_frac is not None:
+                gated = gated.filter(F.col("top_bigram_frac") <= max_top_bigram_frac)
+            gated = gated.drop("dup_line_frac", "dup_word_frac", "top_bigram_frac")
+            counts["after_repetition"] = gated.count()
 
-        rep = repetition_features(gated, id_col="url", text_col="text")
-        gated = gated.join(rep, "url")
-        if max_dup_line_frac is not None:
-            gated = gated.filter(F.col("dup_line_frac") <= max_dup_line_frac)
-        if max_top_bigram_frac is not None:
-            gated = gated.filter(F.col("top_bigram_frac") <= max_top_bigram_frac)
-        gated = gated.drop("dup_line_frac", "dup_word_frac", "top_bigram_frac")
-        counts["after_repetition"] = gated.count()
+        exact = drop_exact_dups(gated, id_col="url", key=text).persist()
+        counts["after_exact_dedup"] = exact.count()
 
-    exact = drop_exact_dups(gated, id_col="url", key=F.col("text"))
-    counts["after_exact_dedup"] = exact.count()
-
-    pairs = minhash_dedup_candidates(
-        exact, id_col="url", text_col="text", num_perm=num_perm, bands=bands
-    )
-    if transitive_near_dedup:
-        # chain-correct variant: connected components over the pair graph,
-        # keep the (lexicographically) smallest url per cluster — A~B~C
-        # collapses to one doc even when the A~C pair was never emitted
-        # (operators/dedup.cluster_pairs; rounds = component diameter)
-        from paddle_spark.operators.dedup import dedup_transitive
-
-        keep = dedup_transitive(
-            exact, pairs, id_col="url", a_col="a", b_col="b"
-        ).filter(F.col("is_canonical")).select(F.col("doc_id").alias("url"))
-        curated = exact.join(keep, "url", "left_semi")
-    else:
-        # the standard one-join web-dedup compromise (greedy pair drop)
-        curated = drop_near_dup_candidates(exact, pairs, id_col="url")
-    counts["after_near_dedup"] = curated.count()
-
-    extracted.unpersist()
+        pairs = minhash_dedup_candidates(
+            exact, id_col="url", text_col="text", num_perm=num_perm, bands=bands
+        )
+        if transitive_near_dedup:
+            # chain-correct variant: connected components over the pair graph,
+            # keep the (lexicographically) smallest url per cluster — A~B~C
+            # collapses to one doc even when the A~C pair was never emitted
+            # (operators/dedup.cluster_pairs; rounds = component diameter)
+            keep = dedup_transitive(
+                exact, pairs, id_col="url", a_col="a", b_col="b"
+            ).filter(F.col("is_canonical")).select(F.col("doc_id").alias("url"))
+            curated = exact.join(keep, "url", "left_semi")
+        else:
+            # the standard one-join web-dedup compromise (greedy pair drop)
+            curated = drop_near_dup_candidates(exact, pairs, id_col="url")
+        counts["after_near_dedup"] = curated.count()
+    finally:
+        scored.unpersist()
+        if exact is not None:
+            exact.unpersist()
     return (
         curated.select(
             "url", "lang_guess", "n_tokens", "quality_score", "text", "text_sha256"

@@ -48,26 +48,32 @@ def stopword_hits_col(text: Column, lang: str) -> Column:
     return F.size(F.filter(words_col(text), lambda w: F.array_contains(sw, F.lower(w))))
 
 
-def langid(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def lang_guess_col(text: Column) -> Column:
     """Heuristic language ID: argmax of per-language stopword hit counts;
     'und' (undetermined) when no stopwords match at all."""
-    hits = {lang: stopword_hits_col(F.col(text_col), lang) for lang in STOPWORDS}
+    hits = {lang: stopword_hits_col(text, lang) for lang in STOPWORDS}
     best = F.greatest(*hits.values())
     guess = F.lit("und")
     # deterministic tie-break: first lang in fixed order wins
     for lang in reversed(list(STOPWORDS)):
         guess = F.when((best > 0) & (hits[lang] == best), F.lit(lang)).otherwise(guess)
+    return guess
+
+
+def langid(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """Per-language stopword hit counts plus ``lang_guess_col``."""
+    text = F.col(text_col)
     return df.select(
         F.col(id_col),
-        *[hits[lang].alias(f"hits_{lang}") for lang in STOPWORDS],
-        guess.alias("lang_guess"),
+        *[stopword_hits_col(text, lang).alias(f"hits_{lang}") for lang in STOPWORDS],
+        lang_guess_col(text).alias("lang_guess"),
     )
 
 
-def _quality_cols(text: Column) -> list[Column]:
-    """The aliased output columns of ``quality_features`` (shared with
-    ``text_stats_frame`` so the consolidated select stays expression-
-    identical to the joined form)."""
+def _quality_cols(text: Column) -> dict[str, Column]:
+    """The aliased output columns of ``quality_features``, by name (shared
+    with ``text_stats_frame`` and ``curate`` so their selects stay
+    expression-identical to the joined form)."""
     n_chars = F.length(text)
     toks = token_count_col(text)
     n_punct = n_chars - F.length(F.regexp_replace(text, r"[\.,;:!\?]", ""))
@@ -95,15 +101,16 @@ def _quality_cols(text: Column) -> list[Column]:
         ),
         4,
     )
-    return [
-        n_chars.cast("long").alias("n_chars"),
-        toks.cast("long").alias("n_tokens"),
-        mean_wlen.alias("mean_word_len"),
-        punct_ratio.alias("punct_ratio"),
-        upper_ratio.alias("upper_ratio"),
-        stop_ratio.alias("stopword_ratio"),
-        score.alias("quality_score"),
-    ]
+    cols = {
+        "n_chars": n_chars.cast("long"),
+        "n_tokens": toks.cast("long"),
+        "mean_word_len": mean_wlen,
+        "punct_ratio": punct_ratio,
+        "upper_ratio": upper_ratio,
+        "stopword_ratio": stop_ratio,
+        "quality_score": score,
+    }
+    return {name: c.alias(name) for name, c in cols.items()}
 
 
 def quality_features(
@@ -116,7 +123,7 @@ def quality_features(
     reward stopword presence and sane word lengths, punish extreme
     punctuation/shortness.
     """
-    return df.select(F.col(id_col), *_quality_cols(F.col(text_col)))
+    return df.select(F.col(id_col), *_quality_cols(F.col(text_col)).values())
 
 
 def fingerprint_norm_col(text: Column) -> Column:
@@ -167,7 +174,7 @@ def text_stats_frame(
     text = F.col(text_col)
     return df.select(
         F.col(id_col),
-        *_quality_cols(text),
+        *_quality_cols(text).values(),
         F.sha2(fingerprint_norm_col(text), 256).alias("fp_sha256"),
         bpe_token_count_col(text).cast("long").alias("n_bpe_tokens"),
     )
@@ -188,7 +195,12 @@ def repetition_features(
     bigram mode is computed with aggregate over a sorted bigram array (no
     UDF, no explode-shuffle; per-row work bounded by doc length).
     """
-    t = F.col(text_col)
+    return df.select(F.col(id_col), *_repetition_cols(F.col(text_col)))
+
+
+def _repetition_cols(t: Column) -> list[Column]:
+    """The aliased output columns of ``repetition_features`` (shared with
+    ``curate``'s repetition gate)."""
     lines = F.filter(F.split(t, r"\n"), lambda l: F.trim(l) != "")
     words = words_col(t)
     n_words = F.size(words)
@@ -220,12 +232,11 @@ def repetition_features(
     n_lines = F.size(lines)
     n_bigrams = F.size(bigrams)
     frac = lambda num, den: F.when(den > 0, F.round(num / den, 6)).otherwise(F.lit(0.0))
-    return df.select(
-        F.col(id_col),
+    return [
         frac(n_lines - F.size(F.array_distinct(lines)), n_lines).alias("dup_line_frac"),
         frac(n_words - F.size(F.array_distinct(words)), n_words).alias("dup_word_frac"),
         frac(top_bigram_count, n_bigrams).alias("top_bigram_frac"),
-    )
+    ]
 
 
 # ---------------------------------------------------------------------------
